@@ -91,7 +91,18 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   * [[NioRawLocalFileSystem]]. Wired via
   * `spark.hadoop.fs.AbstractFileSystem.file.impl` in
   * [[graft.GraftSession]] — like the round-16 fix, strictly the
-  * native-lib behavior on `file://`, nothing else. */
+  * native-lib behavior on `file://`, nothing else.
+  *
+  * Symlinks: [[FastRawLocalFs]] carries only the four overrides Hadoop
+  * 3.4's `RawLocalFs` has, and neither class overrides the symlink
+  * surface (`supportsSymlinks` / `createSymlink` / `getLinkTarget` /
+  * `getFileLinkStatus`): both reach the raw store through
+  * `DelegateToFileSystem`. The deviation is the raw store itself —
+  * `getFileLinkStatus` answers a non-link from one lstat instead of a
+  * forked `readlink`, and a real or dangling link (or a store NIO
+  * refuses) takes Hadoop's shell path unchanged. A Hadoop upgrade whose
+  * `RawLocalFs` gains symlink overrides must port them here;
+  * FastLocalFsSpec pins the parity. */
 class FastLocalFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
     extends org.apache.hadoop.fs.ChecksumFs(new FastRawLocalFs(uri, conf))
 

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
   * is a real graft-manifest table (the materialization, with snapshots,
   * time travel, and row-level ops like any other) plus a versioned
   * definition-and-checkpoint chain (`_MV.v<N>` files in the MV table's
-  * own directory, claimed exactly like snapshot versions). REFRESH
+  * own directory, claimed through [[VersionedChain.claim]] like snapshot
+  * versions). REFRESH
   * never rescans the source: it reads the source's CHANGE FEED from the
   * checkpointed version, folds the delta into the touched groups only,
   * and lands the result as one CDC upsert — cost tracks the CHANGES and
@@ -196,11 +197,10 @@ object ManifestMaterializedView {
       }.toSeq)
   }
 
+  private val DefChain = "_MV.v"
+
   def versions(fs: FileSystem, dir: Path): Seq[Int] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_MV.v"))
-      .flatMap(_.stripPrefix("_MV.v").toIntOption)
+    VersionedChain.versions(fs, dir, DefChain)
 
   def isMaterializedView(fs: FileSystem, dir: Path): Boolean =
     versions(fs, dir).nonEmpty
@@ -214,42 +214,23 @@ object ManifestMaterializedView {
     defReads.incrementAndGet()
     val vs = versions(fs, dir)
     require(vs.nonEmpty, s"no materialized view at $dir")
-    decode(ManifestFiles.readManifest(fs, new Path(dir, s"_MV.v${vs.max}")))
+    decode(ManifestFiles.readManifest(fs, new Path(dir, s"$DefChain${vs.max}")))
   }
 
-  /** Claim the next `_MV.v<N>` — the view/snapshot claim discipline
-    * (stage + rename-if-absent under a same-process lock; see
-    * ManifestViews.publish). Returns the landed version. */
+  /** Claim the next `_MV.v<N>` through [[VersionedChain.claim]], the
+    * claim every versioned chain uses. `expectFresh = true` (CREATE)
+    * refuses when any version exists — re-checked on every attempt under
+    * the claim lock, so exactly one CREATE wins. Returns the landed
+    * version. */
   def publishDef(fs: FileSystem, dir: Path, d: MvDef,
-      expectFresh: Boolean): Int = {
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val lock = (dir.toUri.toString + "#graft-mv-claim").intern()
-    lock.synchronized {
-      var attempt = 0
-      while (true) {
-        attempt += 1
-        require(attempt <= 64, s"mv claim at $dir starved after 64 attempts")
-        val vs = versions(fs, dir)
-        if (expectFresh && vs.nonEmpty)
-          throw new IllegalStateException(
-            s"materialized view at $dir already exists " +
-              s"(versions ${vs.sorted.mkString(",")})")
-        val v = (0 +: vs).max + 1
-        val tmp = new Path(dir, s"._mvclaim-$token")
-        val out = fs.create(tmp, true)
-        try out.write((encode(d).mkString("\n") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        val ok = !fs.exists(new Path(dir, s"_MV.v$v")) &&
-          (try fs.rename(tmp, new Path(dir, s"_MV.v$v"))
-           catch { case _: java.io.IOException => false })
-        if (ok) return v
-        fs.delete(tmp, false)
-      }
-      -1 // unreachable
+      expectFresh: Boolean): Int =
+    VersionedChain.claim(fs, dir, DefChain,
+        VersionedChain.latest(fs, dir, DefChain) + 1) { v =>
+      if (expectFresh && v > 1) throw new IllegalStateException(
+        s"materialized view at $dir already exists (version ${v - 1})")
+      ((encode(d).mkString("\n") + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8), Nil)
     }
-  }
 
   // ---- per-source MV registry (round 15 — kills MvRewrite's
   // O(catalog) discovery) ------------------------------------------------

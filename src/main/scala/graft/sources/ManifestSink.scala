@@ -24,7 +24,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     failed/retried/speculated attempts leave nothing visible;
   *   - `BatchWrite.commit(messages)` — driver-side, runs once, after every
   *     task committed — moves the staged files up and then publishes the
-  *     snapshot through `ManifestFiles.publishSnapshot` (atomic version
+  *     snapshot through `ManifestFiles.publishSnapshotV` (atomic version
   *     claim + rebase-on-conflict; the version file is the single atomic
   *     publish point). A driver crash mid-commit can leave part files
   *     visible to directory listing, so READERS MUST TRUST ONLY
@@ -368,7 +368,7 @@ private[sources] class ManifestTable(schema0: StructType,
     val dir = new Path(p)
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val fs = dir.getFileSystem(conf)
-    ManifestFiles.publishSnapshot(fs, conf, dir, previous => {
+    ManifestFiles.publishSnapshotV(fs, conf, dir, (previous, _) => {
       // Re-prove against the CLAIM-TIME predecessor: a commit that
       // landed between canDeleteWhere and here may have broken the
       // alignment — failing loudly beats deleting rows approximately.
@@ -1277,8 +1277,8 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
   // Driver-side, exactly once, only after EVERY task committed: publish.
   // Each commit is a VERSION: append merges the predecessor snapshot's
   // entries, truncate (mode("overwrite")) starts from empty. Versioning
-  // and concurrency live in ManifestFiles.publishSnapshot — optimistic
-  // rebase: the claim loop re-reads the predecessor on every retry, so
+  // and concurrency live in ManifestFiles.publishSnapshotV — optimistic
+  // rebase: the claim re-reads the predecessor whenever it advances, so
   // concurrent committers merge rather than overwrite each other (no
   // lost updates; spec: ManifestConcurrencySpec). Readers of "latest"
   // see either the old or the new complete snapshot, never a mix;
@@ -1331,8 +1331,8 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     val drop = dropFromPrevious()
     val scanState = scannedDeleteState()
     val scanEntries = scannedEntries()
-    // The base snapshot is supplied by publishSnapshot's claim loop (the
-    // immediate predecessor version, re-read on every retry), so a
+    // The base snapshot is supplied by publishSnapshotV's claim (the
+    // immediate predecessor version, re-read whenever it advances), so a
     // concurrent committer's files are never lost from the merge.
     ManifestFiles.publishSnapshotV(fs, conf.value, dir, (previous, version) => {
       require(!requireFresh || (previous.isEmpty && version == 1),

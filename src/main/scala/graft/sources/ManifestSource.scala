@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * from SQL with genuine time travel:
   *
   *   - every commit is an immutable snapshot `_MANIFEST.v<N>` claimed
-  *     by atomic putIfAbsent with rebase-on-conflict (publishSnapshot);
+  *     by atomic putIfAbsent with rebase-on-conflict (publishSnapshotV);
   *     reads resolve "latest" from the newest COMPLETE version file
   *     (latestComplete — the `_MANIFEST`/`_SCHEMA` pointers are
   *     best-effort probes), or pin a version via
@@ -515,14 +515,8 @@ object ManifestFiles {
 
   def versions(fs: FileSystem, dir: Path): Seq[Int] = versions(fs, dir, None)
 
-  def versions(fs: FileSystem, dir: Path, branch: Option[String]): Seq[Int] = {
-    val pfx = s"_MANIFEST.${chainPrefix(branch)}v"
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(pfx))
-      .flatMap(n => n.stripPrefix(pfx).toIntOption)
-  }
+  def versions(fs: FileSystem, dir: Path, branch: Option[String]): Seq[Int] =
+    VersionedChain.versions(fs, dir, s"_MANIFEST.${chainPrefix(branch)}v")
 
   /** Branch names with at least one version file on their chain. */
   def branches(fs: FileSystem, dir: Path): Seq[String] =
@@ -782,19 +776,28 @@ object ManifestFiles {
       }
     }.toSeq
 
-  /** Named TAGS (round 12 — Iceberg refs): `_TAGS` lines `name,version`.
-    * A tag pins a version for humans (`VERSION AS OF 'nightly'`) and
-    * for VACUUM, which never drops a tagged version. Stored OUTSIDE the
-    * snapshot chain (a tag is a pointer to history, not part of it), so
-    * tagging never creates versions; updates land via tmp + rename. */
-  def tags(fs: FileSystem, dir: Path): Map[String, Int] =
-    readManifest(fs, new Path(dir, "_TAGS")).flatMap { l =>
-      val i = l.lastIndexOf(',')
-      if (i <= 0) None
-      else l.substring(i + 1).toIntOption.map(v => l.substring(0, i) -> v)
-    }.toMap
+  /** Named TAGS (round 12 — Iceberg refs): a tag set is lines
+    * `name,version`. A tag pins a version for humans (`VERSION AS OF
+    * 'nightly'`) and for VACUUM, which never drops a tagged version.
+    * Stored OUTSIDE the snapshot chain (a tag is a pointer to history,
+    * not part of it), so tagging never creates snapshot versions: each
+    * update claims the next `_TAGS.v<N>` of the table's own tag chain.
+    * Tables tagged before the chain existed keep a legacy `_TAGS` file,
+    * read as version 0 and superseded by the first claim. */
+  private val TagsChain = "_TAGS.v"
 
-  /** `versionAsOf` option value → version: integer, or a `_TAGS` name. */
+  private def tagsAt(fs: FileSystem, dir: Path, v: Int): Map[String, Int] =
+    readManifest(fs, new Path(dir, if (v > 0) s"$TagsChain$v" else "_TAGS"))
+      .flatMap { l =>
+        val i = l.lastIndexOf(',')
+        if (i <= 0) None
+        else l.substring(i + 1).toIntOption.map(v => l.substring(0, i) -> v)
+      }.toMap
+
+  def tags(fs: FileSystem, dir: Path): Map[String, Int] =
+    tagsAt(fs, dir, VersionedChain.latest(fs, dir, TagsChain))
+
+  /** `versionAsOf` option value → version: integer, or a tag name. */
   def resolveVersionStr(fs: FileSystem, dir: Path, s: String): Int =
     s.toIntOption.getOrElse {
       val t = tags(fs, dir)
@@ -803,15 +806,21 @@ object ManifestFiles {
           s"(tags: ${t.keys.toSeq.sorted.mkString(", ")})"))
     }
 
-  def writeTags(fs: FileSystem, dir: Path, m: Map[String, Int]): Unit = {
-    val tmp = new Path(dir, s"._tags-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(m.toSeq.sortBy(_._1)
-      .map { case (n, v) => s"$n,$v\n" }.mkString.getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(dir, "_TAGS")
-    fs.delete(dest, false)
-    require(fs.rename(tmp, dest), s"could not publish tags at $dest")
+  /** Land `update(current tags)` as the next tag-chain version. `update`
+    * re-runs against the winner whenever a concurrent update lands
+    * first, so both updates survive; its checks (duplicate / missing
+    * name) run against that winner too. Returns the tag set the landed
+    * update replaced. */
+  def updateTags(fs: FileSystem, dir: Path)(
+      update: Map[String, Int] => Map[String, Int]): Map[String, Int] = {
+    var replaced = Map.empty[String, Int]
+    VersionedChain.claim(fs, dir, TagsChain,
+        VersionedChain.latest(fs, dir, TagsChain) + 1) { v =>
+      replaced = tagsAt(fs, dir, v - 1)
+      (update(replaced).toSeq.sortBy(_._1)
+        .map { case (n, tv) => s"$n,$tv\n" }.mkString.getBytes("UTF-8"), Nil)
+    }
+    replaced
   }
 
   /** Parquet BLOOM FILTER columns (round 12 — Iceberg's
@@ -1320,30 +1329,12 @@ object ManifestFiles {
       .flatMap(_.split(",", 3).lift(2)).flatMap(_.toLongOption).maxOption
 
   /** Publish one snapshot with OPTIMISTIC CONCURRENCY (the Delta/Iceberg
-    * commit protocol): claim version N by rename-without-overwrite of a
-    * fully-written temp file (atomic putIfAbsent on HDFS-semantics
-    * filesystems; on a raw local FS the existence check narrows the race
-    * to microseconds), and — crucially — REBUILD the snapshot from the
-    * just-lost winner's entries on every retry, so a concurrent
-    * committer's files are never dropped from the merged snapshot (no
-    * lost updates). `buildEntries` receives the predecessor snapshot's
-    * lines and returns this commit's full entry list. `_SCHEMA.v<N>`
-    * lands after the claim; the latest pointers swing last via atomic
-    * overwrite-rename (they are a convenience — version files are the
-    * source of truth, see latestVersion). Returns the claimed version. */
-  def publishSnapshot(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-      dir: Path, buildEntries: Array[String] => Array[String],
-      schema: StructType): Int =
-    publishSnapshot(fs, conf, dir, buildEntries, schema, None)
-
-  def publishSnapshot(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-      dir: Path, buildEntries: Array[String] => Array[String],
-      schema: StructType, branch: Option[String]): Int =
-    publishSnapshotV(fs, conf, dir, (prev, _) => buildEntries(prev), schema,
-      branch)
-
-  /** The versioned flavor: `buildEntries` additionally receives the
-    * version number THIS claim attempt is for (re-invoked per retry), so
+    * commit protocol): claim version N through [[VersionedChain.claim]]
+    * and — crucially — REBUILD the snapshot from the just-landed winner's
+    * entries whenever the claim advances, so a concurrent committer's
+    * files are never dropped from the merged snapshot (no lost updates).
+    * `buildEntries` receives the predecessor snapshot's lines and the
+    * version THIS claim attempt is for (re-invoked per advance), so
     * commits can embed sequencing metadata (`#born`/`#eqdels` version
     * scoping) that survives the manifest's sorted storage. `startAt`
     * floors the first claimed version — how a fresh BRANCH chain starts
@@ -1351,7 +1342,7 @@ object ManifestFiles {
     * with main's so version-scoped metadata means the same thing on
     * both chains. Storage is the SEGMENTED list encoding (see
     * [[encodeSnapshot]]): the closure works on full logical lines, the
-    * landed bytes are O(delta). */
+    * landed bytes are O(delta). Returns the claimed version. */
   def publishSnapshotV(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
       dir: Path, buildEntries: (Array[String], Int) => Array[String],
       schema: StructType, branch: Option[String] = None,
@@ -1374,95 +1365,61 @@ object ManifestFiles {
     * (create_branch, rollback, fast_forward) use this directly to
     * re-reference the source snapshot's segments verbatim: a branch
     * fork or a rollback of a million-file table is a one-small-file
-    * metadata commit. */
+    * metadata commit. `_SCHEMA.v<N>` lands after the claim; main's
+    * latest pointers swing last via atomic overwrite-rename (they are a
+    * convenience — version files are the source of truth, see
+    * latestVersion). */
   def publishRawV(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
       dir: Path, buildRaw: (Array[String], Int) => (Array[String], Seq[Path]),
       schema: StructType, branch: Option[String] = None,
       startAt: Int = 0): Int = {
     val pfx = chainPrefix(branch)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf)
-    // Temp names carry a committer-unique token: two committers racing
-    // for the same version number must stage to DIFFERENT temp files.
+    val chain = s"_MANIFEST.${pfx}v"
     val token = java.util.UUID.randomUUID().toString.take(8)
-    // The CLAIM must go through FileSystem.rename, not FileContext: it
-    // refuses an existing destination natively (atomic putIfAbsent on
-    // HDFS semantics) AND ChecksumFileSystem moves the data+crc sidecar
-    // pair coherently — FileContext's pair-unaware rename let a losing
-    // claimer clobber the winner's .crc, corrupting the version file
-    // for every reader. Pointer swings still use FileContext's
-    // overwrite-rename; pointers are an existence probe only (version
-    // files are the read path), so their last-swing-wins race is benign.
-    def land(tmpName: String, bytes: Array[Byte], target: String,
-        overwrite: Boolean): Boolean = {
+    // Post-claim writes use FileContext's overwrite-rename. OVERWRITE is
+    // delete-then-rename internally, so concurrent swingers can race each
+    // other into a spurious already-exists. Losing a latest-pointer swing
+    // is fine — pointers are an existence probe only, and some
+    // committer's complete snapshot is the pointer either way. A temp
+    // that vacuum swept before the rename is restaged, so `_SCHEMA.v<N>`
+    // (which completes version N for readers) always lands.
+    lazy val fc = org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf)
+    def swing(tmpName: String, bytes: Array[Byte], target: String): Unit = {
       val tmp = new Path(dir, tmpName)
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      if (overwrite) {
-        // Best-effort: FileContext's OVERWRITE is delete-then-rename
-        // internally, so concurrent swingers can race each other into a
-        // spurious already-exists. Losing the swing is fine — some
-        // committer's complete snapshot is the pointer either way.
-        try {
-          fc.rename(tmp, new Path(dir, target),
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        } catch {
-          case _: java.io.IOException => fs.delete(tmp, false)
-        }
-        true
-      } else {
-        val ok =
-          try fs.rename(tmp, new Path(dir, target))
-          catch { case _: java.io.IOException => false }
-        if (!ok) fs.delete(tmp, false)
-        ok
+      var swept = true
+      while (swept) {
+        val out = fs.create(tmp, true)
+        try out.write(bytes) finally out.close()
+        swept =
+          try {
+            fc.rename(tmp, new Path(dir, target),
+              org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+            false
+          } catch {
+            case _: java.io.IOException => !fs.exists(tmp) || {
+              fs.delete(tmp, false); false }
+          }
       }
     }
-
-    // POSIX rename overwrites silently, so on a LOCAL filesystem the
-    // exists-check + rename pair is not atomic across threads — a raw
-    // race let two claimers both "succeed" with one snapshot silently
-    // replaced. Same-process committers (local mode, one driver JVM)
-    // therefore serialize on a lock keyed by the table directory —
-    // Delta's LocalLogStore makes the same tradeoff. On HDFS-semantics
-    // filesystems rename refuses an existing destination server-side,
-    // so CROSS-process committers are safe where it matters (shared
-    // production storage); cross-process writers on one raw local disk
-    // remain a documented out-of-scope race.
-    val lock = (dir.toUri.toString + s"#graft-manifest-claim-$pfx").intern()
-    lock.synchronized {
-      var version = math.max(latestVersion(fs, dir, branch) + 1, startAt)
-      var entries: Array[Byte] = null
-      var claimed = false
-      while (!claimed) {
-        val prevRaw =
-          if (version <= 1) Array.empty[String]
-          else readManifest(fs, new Path(dir, s"_MANIFEST.${pfx}v${version - 1}"))
-        val (raw, segsWritten) = buildRaw(prevRaw, version)
-        entries = raw.mkString("\n").getBytes("UTF-8")
-        claimed = !fs.exists(new Path(dir, s"_MANIFEST.${pfx}v$version")) &&
-          land(s"._claim-$token-$pfx$version", entries,
-            s"_MANIFEST.${pfx}v$version", overwrite = false)
-        if (!claimed) {
-          // this attempt's segments are unreferenced — sweep them now
-          // rather than leaving orphans for vacuum
-          segsWritten.foreach(p => try fs.delete(p, false)
-            catch { case _: Exception => })
-          version += 1
+    var entries: Array[Byte] = null
+    VersionedChain.claim(fs, dir, chain,
+      math.max(latestVersion(fs, dir, branch) + 1, startAt),
+      landed = version => {
+        val schemaBytes = schema.json.getBytes("UTF-8")
+        swing(s"._publish-$token-vschema", schemaBytes, s"_SCHEMA.${pfx}v$version")
+        // the latest pointers are MAIN's convenience probe — branch
+        // readers resolve through their own chain's version files
+        if (branch.isEmpty) {
+          swing(s"._publish-$token-lschema", schemaBytes, "_SCHEMA")
+          swing(s"._publish-$token-lmanifest", entries, "_MANIFEST")
         }
-      }
-      val schemaBytes = schema.json.getBytes("UTF-8")
-      land(s"._publish-$token-vschema", schemaBytes, s"_SCHEMA.${pfx}v$version",
-        overwrite = true)
-      // the latest pointers are MAIN's convenience probe — branch
-      // readers resolve through their own chain's version files
-      if (branch.isEmpty) {
-        land(s"._publish-$token-lschema", schemaBytes, "_SCHEMA",
-          overwrite = true)
-        land(s"._publish-$token-lmanifest", entries, "_MANIFEST",
-          overwrite = true)
-      }
-      version
+      }) { version =>
+      val prevRaw =
+        if (version <= 1) Array.empty[String]
+        else readManifest(fs, new Path(dir, s"$chain${version - 1}"))
+      val (raw, segsWritten) = buildRaw(prevRaw, version)
+      entries = raw.mkString("\n").getBytes("UTF-8")
+      (entries, segsWritten)
     }
   }
 
@@ -4117,7 +4074,7 @@ class GraftManifestCatalog extends TableCatalog
     metaTable(ident, None).getOrElse(load(ident, None))
 
   /** `VERSION AS OF x`: an integer is a version number; anything else
-    * resolves through the table's `_TAGS` refs, then its BRANCHES
+    * resolves through the table's tags, then its BRANCHES
     * (`VERSION AS OF 'nightly'` / `VERSION AS OF 'staging'` — Iceberg
     * resolves both ref kinds here). Metadata tables resolve against
     * their BASE table's refs (tags only — a branch head is mutable). */
@@ -4214,9 +4171,9 @@ class GraftManifestCatalog extends TableCatalog
     require(!ManifestViews.exists(f, dir),
       s"'${ident.name}' is a VIEW in catalog $catalogName — DROP it first")
     val (bucket, part) = parseTransforms(schema, partitions)
-    ManifestFiles.publishSnapshot(f,
+    ManifestFiles.publishSnapshotV(f,
       SparkSession.active.sessionState.newHadoopConf(), dir,
-      _ => createConfLines(schema, bucket, part, properties), schema)
+      (_, _) => createConfLines(schema, bucket, part, properties), schema)
     load(ident, None)
   }
 
@@ -4513,7 +4470,7 @@ class GraftManifestCatalog extends TableCatalog
         // #branchbase (divergence check) and #tableconf,rowidnext (the
         // row-id high-water mark — ids handed to readers are never
         // reused, even across CREATE OR REPLACE) survive the replacement
-        ManifestFiles.publishSnapshot(f, hconf, dir, previous =>
+        ManifestFiles.publishSnapshotV(f, hconf, dir, (previous, _) =>
           previous.filter(l => l.startsWith("#branchbase,") ||
             l.startsWith("#tableconf,rowidnext,")) ++ confLines,
           ManifestTable.nullableSchema(schema))
@@ -4934,9 +4891,9 @@ class GraftManifestCatalog extends TableCatalog
           s"only, got $other")
     }
     val drops = newDropLines.reverse.toArray
-    ManifestFiles.publishSnapshot(f,
+    ManifestFiles.publishSnapshotV(f,
       SparkSession.active.sessionState.newHadoopConf(), dir,
-      previous => {
+      (previous, _) => {
         val base0 = morFlip match {
           case Some(true) =>
             previous.filterNot(_ == ManifestFiles.MergeOnReadLine) :+
@@ -6196,12 +6153,18 @@ private[sources] object ManifestProcedures {
             fs.delete(new Path(dir, s".$n.crc"), false)
         }
       }
-      // Crashed committers leave orphan temp files (`._claim-*` /
-      // `._publish-*`); racing a LIVE commit is harmless — its claim
-      // retry stages a fresh temp. Not counted as data files.
+      // Crashed committers leave orphan temp files: `._claim-*` from any
+      // chain claimed in this directory (snapshots, tags, an MV table's
+      // `_MV` definitions) and `._publish-*` from pointer swings.
+      // Sweeping a LIVE commit's staged temp is harmless: a claim whose
+      // rename finds neither its target nor its temp restages the same
+      // bytes at the same version (VersionedChain.claim), and a swept
+      // swing temp is restaged the same way (publishRawV). Not counted
+      // as data files.
       fs.listStatus(dir).foreach { st =>
         val n = st.getPath.getName
-        if (st.isFile && (n.startsWith("._claim-") || n.startsWith("._publish-")))
+        if (st.isFile && (n.startsWith(VersionedChain.TempPrefix) ||
+            n.startsWith("._publish-")))
           fs.delete(st.getPath, false)
       }
       result(new StructType().add("versions_dropped", IntegerType)
@@ -6586,10 +6549,11 @@ private[sources] object ManifestProcedures {
       require(ManifestFiles.versions(fs, dir).contains(v),
         s"cannot tag version $v — it does not exist " +
           s"(have: ${ManifestFiles.versions(fs, dir).sorted.mkString(",")})")
-      val cur = ManifestFiles.tags(fs, dir)
-      require(!cur.contains(tag),
-        s"tag '$tag' already names version ${cur(tag)} — drop_tag it first")
-      ManifestFiles.writeTags(fs, dir, cur + (tag -> v))
+      ManifestFiles.updateTags(fs, dir) { cur =>
+        require(!cur.contains(tag),
+          s"tag '$tag' already names version ${cur(tag)} — drop_tag it first")
+        cur + (tag -> v)
+      }
       result(new StructType().add("tag", StringType)
           .add("version", IntegerType),
         Array(UTF8String.fromString(tag), v))
@@ -6602,13 +6566,14 @@ private[sources] object ManifestProcedures {
       val dir = dirFor(input.getUTF8String(0).toString)
       val tag = input.getUTF8String(1).toString
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      val cur = ManifestFiles.tags(fs, dir)
-      require(cur.contains(tag),
-        s"no tag '$tag' (have: ${cur.keys.toSeq.sorted.mkString(", ")})")
-      ManifestFiles.writeTags(fs, dir, cur - tag)
+      val replaced = ManifestFiles.updateTags(fs, dir) { cur =>
+        require(cur.contains(tag),
+          s"no tag '$tag' (have: ${cur.keys.toSeq.sorted.mkString(", ")})")
+        cur - tag
+      }
       result(new StructType().add("tag", StringType)
           .add("was_version", IntegerType),
-        Array(UTF8String.fromString(tag), cur(tag)))
+        Array(UTF8String.fromString(tag), replaced(tag)))
     }
 
   /** `create_branch(table, branch[, version])` — fork a writable branch

@@ -5,8 +5,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** GOVERNED VIEWS (round 14): view definitions stored as versioned
   * metadata in the catalog root — a view `v` is a directory holding a
-  * `_VIEW.v<N>` chain, claimed through the same rename-if-absent loop
-  * snapshots use, so CREATE OR REPLACE is one atomic commit, concurrent
+  * `_VIEW.v<N>` chain, claimed through [[VersionedChain.claim]] like
+  * snapshots, so CREATE OR REPLACE is one atomic commit, concurrent
   * CREATEs race loudly (exactly one claim lands), and old definitions
   * remain readable (`VERSION AS OF` on the VIEW resolves the definition
   * that was current at that version). This is the modern twin of the
@@ -89,11 +89,10 @@ object ManifestViews {
       }.toMap)
   }
 
+  private val DefChain = "_VIEW.v"
+
   def versions(fs: FileSystem, dir: Path): Seq[Int] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_VIEW.v"))
-      .flatMap(_.stripPrefix("_VIEW.v").toIntOption)
+    VersionedChain.versions(fs, dir, DefChain)
 
   def exists(fs: FileSystem, dir: Path): Boolean = versions(fs, dir).nonEmpty
 
@@ -103,47 +102,22 @@ object ManifestViews {
       if (vs.isEmpty) 0 else vs.max)
     require(vs.contains(v),
       s"no view version $v at $dir (have: ${vs.sorted.mkString(",")})")
-    decode(ManifestFiles.readManifest(fs, new Path(dir, s"_VIEW.v$v")))
+    decode(ManifestFiles.readManifest(fs, new Path(dir, s"$DefChain$v")))
   }
 
-  /** Claim the next `_VIEW.v<N>` atomically (stage + rename-if-absent,
-    * the SNAPSHOT claim discipline — see publishRawV's scaladoc):
-    * same-process claimers serialize on a lock keyed by the view
-    * directory, because POSIX rename on a raw local filesystem silently
-    * overwrites and the exists-check + rename pair alone is not atomic
-    * across threads; on HDFS-semantics storage rename refuses an
-    * existing destination server-side, covering cross-process racers
-    * where it matters. `expectFresh = true` (CREATE) refuses when ANY
-    * version exists — re-checked under the lock, so exactly one CREATE
-    * wins and the loser fails loudly. Returns the landed version. */
+  /** Claim the next `_VIEW.v<N>` through [[VersionedChain.claim]], the
+    * claim every versioned chain uses. `expectFresh = true` (CREATE)
+    * refuses when ANY version exists — re-checked on every attempt under
+    * the claim lock, so exactly one CREATE wins and the loser fails
+    * loudly. Returns the landed version. */
   def publish(fs: FileSystem, dir: Path, d: ViewDef,
-      expectFresh: Boolean): Int = {
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val lock = (dir.toUri.toString + "#graft-view-claim").intern()
-    lock.synchronized {
-      var attempt = 0
-      while (true) {
-        attempt += 1
-        require(attempt <= 64, s"view claim at $dir starved after 64 attempts")
-        val vs = versions(fs, dir)
-        if (expectFresh && vs.nonEmpty)
-          throw new IllegalStateException(
-            s"view at $dir already exists (versions ${vs.sorted.mkString(",")})" +
-              " — CREATE OR REPLACE to evolve it")
-        val v = (0 +: vs).max + 1
-        val tmp = new Path(dir, s"._viewclaim-$token")
-        val out = fs.create(tmp, true)
-        try out.write((encode(d).mkString("\n") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        val ok = !fs.exists(new Path(dir, s"_VIEW.v$v")) &&
-          (try fs.rename(tmp, new Path(dir, s"_VIEW.v$v"))
-           catch { case _: java.io.IOException => false })
-        if (ok) return v
-        fs.delete(tmp, false) // lost a cross-process race; retry
-      }
-      -1 // unreachable
+      expectFresh: Boolean): Int =
+    VersionedChain.claim(fs, dir, DefChain,
+        VersionedChain.latest(fs, dir, DefChain) + 1) { v =>
+      if (expectFresh && v > 1) throw new IllegalStateException(
+        s"view at $dir already exists (version ${v - 1})" +
+          " — CREATE OR REPLACE to evolve it")
+      ((encode(d).mkString("\n") + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8), Nil)
     }
-  }
 }

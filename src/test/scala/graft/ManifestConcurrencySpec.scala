@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.ManifestFiles
 
 /** Optimistic concurrency of the manifest commit protocol
-  * (ManifestFiles.publishSnapshot): concurrent committers claim version
+  * (ManifestFiles.publishSnapshotV): concurrent committers claim version
   * numbers by rename-without-overwrite and REBASE their snapshot onto
   * the just-committed predecessor on every retry — so no committer ever
   * drops another's files from the merged snapshot (the lost-update bug

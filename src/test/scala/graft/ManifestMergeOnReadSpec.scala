@@ -191,7 +191,7 @@ class ManifestMergeOnReadSpec extends AnyFunSuite {
     import scala.concurrent.ExecutionContext.Implicits.global
     val (cat, root) = freshCat()
     morTable(cat)
-    // two committers race: publishSnapshot's claim loop rebases the
+    // two committers race: publishSnapshotV's claim rebases the
     // loser onto the winner's snapshot, so BOTH #dels lines must land
     val fs = Seq("m = 2", "m = 8").map { pred =>
       Future(spark.sql(s"DELETE FROM $cat.t WHERE $pred"))
